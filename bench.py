@@ -66,9 +66,9 @@ def main() -> None:
     # warm JVM codegen + Arrow + python-worker paths so benches measure
     # steady state (one-time session costs are not the 100 TB design point)
     from supercrawler_spark.functions import udfs
-    (pages.limit(32).select("url", "html")
-     .withColumn("p", udfs.extract_page("url", "html"))
-     .withColumn("c", udfs.make_canonicalize(True)(F.col("url")))
+    (pages.limit(32)
+     .select(udfs.make_round_udf()("url", "html", "content_type",
+                                   F.lit(True)).alias("p"))
      .write.mode("overwrite").parquet(tempfile.mkdtemp(prefix="bw_") + "/w"))
 
     timings: dict[str, float] = {}

@@ -10,10 +10,10 @@ scaling pair directly.
 
 Usage: python scripts/kernel_profile.py [synth_sf] [n_pages] [--profile]
 With --profile, prints the top cumulative-time slices from cProfile.
-With --alloc, reports Python-allocation traffic per page (tracemalloc):
-total bytes allocated during extraction vs html bytes in — the
-memory-subsystem-traffic number behind the 8->32 single-host scaling
-ceiling (VERDICT r4 order #6).
+With --alloc, reports the per-page tracemalloc peak above each page's
+starting level, summed over pages and set against html bytes in. It is a
+lower bound on allocation traffic (memory freed and reused within a page
+never raises the peak), not the traffic itself.
 With --procs N, runs the kernel in N independent OS processes over
 disjoint page shards (no Spark, no shared state) and reports aggregate
 pages/s — the kernel-only multi-core scaling measurement.
@@ -66,24 +66,23 @@ def main() -> None:
         pstats.Stats(pr).sort_stats("cumulative").print_stats(25)
 
     if "--alloc" in sys.argv:
-        # allocation traffic, not peak: every allocated block is memory
-        # the CPU wrote (and mostly read back), so alloc-bytes/html-byte
-        # approximates the kernel's write amplification
+        # per-page peak: the high-water mark of traced memory above the
+        # page's starting level, summed over pages. Blocks freed and
+        # reallocated within a page never raise the peak, so this is a
+        # lower bound on allocation traffic, not the traffic itself
         import tracemalloc
         tracemalloc.start()
-        base = tracemalloc.get_traced_memory()[0]
-        snap_alloc = 0
+        peak_sum = 0
         for u, h in pages:
             before = tracemalloc.get_traced_memory()[0]
             tracemalloc.reset_peak()
             refspec.extract_page_fields(h, u, variant="supercrawler")
             peak = tracemalloc.get_traced_memory()[1]
-            snap_alloc += max(0, peak - before)
+            peak_sum += max(0, peak - before)
         tracemalloc.stop()
-        del base
-        print(f"alloc_peak_sum={snap_alloc} "
-              f"bytes_per_page={snap_alloc / len(pages):.0f} "
-              f"amplification_vs_html={snap_alloc / total_bytes:.2f}x")
+        print(f"page_peak_sum={peak_sum} "
+              f"peak_bytes_per_page={peak_sum / len(pages):.0f} "
+              f"peak_vs_html={peak_sum / total_bytes:.2f}x")
 
     if "--procs" in sys.argv:
         import multiprocessing as mp

@@ -3,8 +3,9 @@
 Re-expresses the reference scheduler (src/supercrawler.rs:1259-1369) as
 micro-batch rounds: each round is one declarative DataFrame plan
 
-    frontier_r → (politeness) → fetch-join pages → extract (Arrow UDF)
-               → docs_r  +  explode links → canonicalize → scope semi-join
+    frontier_r → (politeness) → fetch-join pages → round UDF (extract,
+               canonicalize links, doc key: the round's one Python pass)
+               → docs_r  +  explode links → scope semi-join
                → seen anti-join + intra-round first-seen dedup
                → frontier_{r+1}, seen delta, per-partition metrics
 
@@ -29,8 +30,10 @@ Scale notes (the 100 TB design point):
   - pages is bucket-partitioned by pmod(xxhash64(url), B); each round prunes
     the pages scan to the buckets present in the frontier (partition pruning
     on disk) and broadcasts the frontier when it is small.
-  - the extract UDF is the compute hotspot: Arrow-vectorized, bounded batch
-    size, runs once per round (results are checkpointed, never recomputed).
+  - the round UDF is the compute hotspot: Arrow-vectorized, bounded batch
+    size, runs once per round (results are checkpointed, never recomputed);
+    it is the round's only Python, since every Arrow UDF evaluation costs a
+    fixed slice of Python worker CPU per task whatever its row count.
   - per-host politeness (north-rule extension; the reference has only a
     global semaphore): robots disallow-prefix filter + per-host crawl-delay
     budgets enforced via *salted* per-(host, salt) sub-windows so a hot host
@@ -145,10 +148,6 @@ class CrawlResult:
     phase_times: dict = field(default_factory=dict)
 
 
-def _canon_udf(cfg: CrawlConfig):
-    return udfs.make_canonicalize(cfg.strip_tracking)
-
-
 def _with_bucket(df: DataFrame, cfg: CrawlConfig) -> DataFrame:
     return df.withColumn("bucket", udfs.bucket_col(F.col("url"), cfg.num_buckets))
 
@@ -254,9 +253,8 @@ class Crawler:
             from supercrawler_spark.operators.robots import robots_from_pages
             robots = robots_from_pages(pages)
         self.robots = robots
-        self._extract_page = (udfs.extract_page
-                              if self.cfg.variant == "supercrawler"
-                              else udfs.make_extract_page(self.cfg.variant))
+        self._round_udf = udfs.make_round_udf(self.cfg.variant,
+                                              self.cfg.strip_tracking)
         self._pages_bucketed = "bucket" in pages.columns
         if self._pages_bucketed:
             # bucket pruning is only sound if the pages layout used the SAME
@@ -279,7 +277,6 @@ class Crawler:
 
     def _init_frontier(self, seeds: DataFrame) -> None:
         cfg = self.cfg
-        canon = _canon_udf(cfg)
         phases: dict = {}
         _pt = time.monotonic()
         s = seeds
@@ -289,12 +286,17 @@ class Crawler:
                                                "seed_order")
         if cfg.max_urls is not None:  # O2: bounds the seed set only
             s = s.filter(F.col("seed_order") < cfg.max_urls)
-        s = (s.withColumn("curl", canon(F.col("url")))
-             .filter(F.col("curl").isNotNull())        # F13 invalid-seed drop
-             .withColumn("host", udfs.parse_host(F.col("curl"))))
-        # first-seen dedup among seeds, keep request order (rs:1244)
+        canon = udfs.make_canonical_host(cfg.strip_tracking)(F.col("url"))
+        s = s.select("seed_order", canon.alias("c")).select(
+            "seed_order", F.col("c.url").alias("curl"),
+            F.col("c.host").alias("host"))
+        # first-seen dedup among seeds, keep request order (rs:1244), and
+        # the F13 invalid-seed drop as one filter over the window's rank: a
+        # filter on curl alone is pushed below the window and the UDF's
+        # projection, which then evaluates the UDF a second time
         w = Window.partitionBy("curl").orderBy("seed_order")
-        s = (s.withColumn("_rk", F.row_number().over(w))
+        s = (s.withColumn("_rk", F.when(F.col("curl").isNotNull(),
+                                        F.row_number().over(w)))
              .filter(F.col("_rk") == 1).drop("_rk"))
         frontier0 = _with_bucket(
             s.select(F.col("curl").alias("url"), "host",
@@ -357,7 +359,6 @@ class Crawler:
 
     def _run_round(self, r: int, frontier: DataFrame, scope: DataFrame) -> dict:
         cfg, spark, store = self.cfg, self.spark, self.store
-        canon = _canon_udf(cfg)
         # A5 phase timings: wall seconds per driver-visible phase, committed
         # with the round manifest (and surfaced in CrawlResult.phase_times)
         # so scaling runs can attribute time to scan/extract vs fixed
@@ -581,42 +582,20 @@ class Crawler:
         if snap:
             fetched = fetched.drop("warc_ts")
 
-        # --- extract (the Arrow UDF hotspot); F5 content-type dispatch ----
-        meta_cols = ["url", "host", "depth", "seq", "bucket"]
-        fetched_flag = F.col("html").isNotNull().alias("fetched")
-        if has_ct:
-            # split by content type so each Arrow UDF only sees its rows
-            # (a when() over both UDFs would evaluate both on every row).
-            # PDF takes precedence over html — the reference dispatches
-            # application/pdf FIRST (src/supercrawler.rs:717-730), so a
-            # pathological "text/html, application/pdf" content type must
-            # land in exactly one branch (the three filters partition rows).
-            is_pdf = F.coalesce(
-                F.col("content_type").contains("application/pdf"), F.lit(False))
-            is_html = F.coalesce(
-                F.col("content_type").contains("text/html"), F.lit(False)) \
-                & ~is_pdf
-            html_part = (fetched.filter(F.col("html").isNull() | is_html)
-                         .withColumn("page", self._extract_page("url", "html"))
-                         .select(*meta_cols, fetched_flag,
-                                 F.col("page.mdx").alias("mdx"),
-                                 F.col("page.links").alias("links")))
-            pdf_part = (fetched.filter(F.col("html").isNotNull() & is_pdf)
-                        .select(*meta_cols, fetched_flag,
-                                udfs.extract_pdf_mdx("url", "html").alias("mdx"),
-                                F.lit(None).cast("array<string>").alias("links")))
-            other_part = (fetched.filter(
-                F.col("html").isNotNull() & ~is_html & ~is_pdf)
-                .select(*meta_cols, fetched_flag,
-                        F.lit(None).cast("string").alias("mdx"),
-                        F.lit(None).cast("array<string>").alias("links")))
-            extracted = html_part.unionByName(pdf_part).unionByName(other_part)
-        else:
-            extracted = (fetched
-                         .withColumn("page", self._extract_page("url", "html"))
-                         .select(*meta_cols, fetched_flag,
-                                 F.col("page.mdx").alias("mdx"),
-                                 F.col("page.links").alias("links")))
+        # --- extract: the round's one Python pass (udfs.make_round_udf) ---
+        # F5 content-type dispatch, the kernel, F10 (links only for parents
+        # below the depth budget), link canonicalization + host and the X7
+        # doc key all happen in one Arrow UDF evaluation per row
+        ct = F.col("content_type") if has_ct else F.lit("text/html")
+        page = self._round_udf(F.col("url"), F.col("html"), ct,
+                               F.col("depth") < cfg.crawl_depth)
+        extracted = (fetched
+                     .select(*FRONTIER_COLS,
+                             F.col("html").isNotNull().alias("fetched"),
+                             page.alias("page"))
+                     .select(*FRONTIER_COLS, "fetched", "page.mdx",
+                             "page.doc_key",
+                             F.col("page.out").alias("links")))
         extracted = extracted.withColumn("_pid", F.spark_partition_id())
         # checkpoint the round's expensive work exactly once; the row count
         # AND a url-hash checksum ride the SAME write job via an Observation
@@ -649,10 +628,11 @@ class Crawler:
             got = spark.read.parquet(extracted_path).select("url")
             missing = (fetchable.select(*FRONTIER_COLS)
                        .join(F.broadcast(got), "url", "left_anti")
-                       .select("url", "host", "depth", "seq", "bucket",
+                       .select(*FRONTIER_COLS,
                                F.lit(False).alias("fetched"),
                                F.lit(None).cast("string").alias("mdx"),
-                               F.lit(None).cast("array<string>").alias("links"))
+                               F.lit(None).cast("string").alias("doc_key"),
+                               F.lit(None).cast(udfs.LINKS).alias("links"))
                        .withColumn("_pid", F.spark_partition_id()))
             missing.write.mode("append").parquet(extracted_path)
         if fetch_cache is not None:
@@ -665,8 +645,7 @@ class Crawler:
         docs = (extracted
                 .filter(F.col("mdx").isNotNull()
                         & (F.length(F.trim(F.col("mdx"))) > 0))
-                .select("url", "depth", "seq", "mdx",
-                        udfs.doc_key(F.col("url")).alias("doc_key")))
+                .select("url", "depth", "seq", "mdx", "doc_key"))
         docs.write.mode("overwrite").parquet(store.docs_path(r))
         phases["docs_write"] = round(time.monotonic() - _pt, 3)
         _pt = time.monotonic()
@@ -679,16 +658,17 @@ class Crawler:
         # its children depth 1 and still expands (rs:1335 semantics).
         new_count = 0
         if expanding:
+            # links are canonical (F4/F13) and null for parents at the
+            # depth limit (F10), both applied by the round UDF
             links = (extracted
-                     .filter(F.col("links").isNotNull()
-                             & (F.col("depth") < cfg.crawl_depth))  # F10
+                     .filter(F.col("links").isNotNull())
                      .select(F.col("seq").alias("parent_seq"),
                              F.col("depth").alias("parent_depth"),
                              F.posexplode("links").alias("link_pos", "link")))
             candidates = (links
-                          .withColumn("url", canon(F.col("link")))
-                          .filter(F.col("url").isNotNull())     # F13
-                          .withColumn("host", udfs.parse_host(F.col("url")))
+                          .select("parent_seq", "parent_depth", "link_pos",
+                                  F.col("link.url").alias("url"),
+                                  F.col("link.host").alias("host"))
                           .join(F.broadcast(scope), "host", "left_semi"))  # F8
             candidates = (candidates
                           .withColumn("url_hash", F.xxhash64("url"))

@@ -61,17 +61,22 @@ def exact_dedup(docs: DataFrame, text_col: str = "text",
 def shingles(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id",
              n: int = 3) -> DataFrame:
     """Word n-gram shingles, distinct per doc: (id, shingle)."""
-    toks = F.split(F.regexp_replace(F.col(text_col), r"^\s+|\s+$", ""), r"\s+")
+    # the token array is bound as a column first: inlined into the
+    # transform lambda, the split would re-run once per shingle
+    toks = (docs
+            .select(F.col(id_col).alias("doc_id"),
+                    F.split(F.regexp_replace(F.col(text_col),
+                                             r"^\s+|\s+$", ""),
+                            r"\s+").alias("_toks"))
+            .filter(F.size("_toks") >= n))
     # shingle i = tokens[i..i+n-1] joined by ' ' — built-in transform/slice,
     # no Python
     sh = F.transform(
-        F.sequence(F.lit(0), F.size(toks) - n),
-        lambda i: F.concat_ws(" ", F.slice(toks, i + 1, n)),
+        F.sequence(F.lit(0), F.size("_toks") - n),
+        lambda i: F.concat_ws(" ", F.slice(F.col("_toks"), i + 1, n)),
     )
-    return (docs
-            .filter(F.size(toks) >= n)
-            .select(F.col(id_col).alias("doc_id"),
-                    F.explode(F.array_distinct(sh)).alias("shingle")))
+    return toks.select("doc_id", F.explode(F.array_distinct(sh))
+                       .alias("shingle"))
 
 
 def minhash_signatures(docs: DataFrame, num_hashes: int = 8,
