@@ -347,9 +347,11 @@ def q_source_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Transitive near-dup clustering: MinHash-LSH pairs → connected
-    components (iterative min-label propagation) → keeper per cluster;
-    oracle is a recursive-CTE transitive closure over the same pairs."""
+    """Transitive near-dup clustering (clusters.dedup_clusters): min-label
+    propagation alternating over the bipartite doc↔LSH-block membership
+    relation — rows shuffled per round are docs×bands, never the k²
+    within-block pairs — then a keeper per cluster; oracle is a
+    recursive-CTE transitive closure over the LSH pairs."""
     return clusters.dedup_clusters(_docs(spark, sf_dir))
 
 
@@ -365,14 +367,6 @@ def q_dedup_clusters_star(spark: SparkSession, sf_dir: str) -> DataFrame:
     return cc.select(
         "doc_id", "cluster_id",
         (F.col("doc_id") == F.col("cluster_id")).alias("is_keeper"))
-
-
-def q_dedup_clusters_blocks(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Pair-free near-dup clustering (clusters.dedup_clusters_blocks):
-    min-label propagation alternating over the bipartite doc↔LSH-block
-    membership relation — rows shuffled per round are docs×bands, never
-    the k² within-block pairs; shares the transitive-closure oracle."""
-    return clusters.dedup_clusters_blocks(_docs(spark, sf_dir))
 
 
 def q_resolve_duplicates(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1652,20 +1646,17 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     # Dict order is the driver's coverage policy: the correctness gate
     # evaluates the FIRST 50 entries, so the window below is curated to
     # hold the crawl core (SURVEY §2) plus the most load-bearing pipeline
-    # stages. Round 5 rotated the eight never-driver-gated rows the
-    # round-4 verdict named INTO the window (media_headers,
-    # dedup_clusters_blocks, bm25_topk, gopher_rules, pld_stats,
-    # domain_kl, fetch_waves, zipf_fit) in place of near-twin rows whose
-    # machinery stays covered by an in-window sibling: script_detect by
-    # langid (same charclass-scan machinery), normalize_text by
-    # fix_mojibake + scrub_pii (replace chains), train_val_split by
-    # exact_dedup (hash-pmod bucketing), decontaminate_fuzzy by
-    # decontaminate + minhash_lsh_pairs, dedup_clusters (pairwise+CC) by
-    # dedup_clusters_star + the incoming dedup_clusters_blocks
-    # (equality-tested alternative paths over the same contract),
-    # resolve_duplicates by the cluster outputs that feed it, line_dedup
-    # by exact_dedup + remove_duplicate_spans, snapshot_diff by
-    # cdx_index + sessionize. Every §2 crawl-core row stays in-window.
+    # stages. Rows outside it are near-twins whose machinery an in-window
+    # sibling covers: script_detect by langid (same charclass-scan
+    # machinery), normalize_text by fix_mojibake + scrub_pii (replace
+    # chains), train_val_split by exact_dedup (hash-pmod bucketing),
+    # decontaminate_fuzzy by decontaminate + minhash_lsh_pairs,
+    # line_dedup by exact_dedup + remove_duplicate_spans, snapshot_diff
+    # by cdx_index + sessionize. Near-dup clustering is one function:
+    # resolve_duplicates and cluster_purity run dedup_clusters in-window,
+    # so dedup_clusters and its alias dedup_clusters_blocks (the same
+    # plan) sit outside; dedup_clusters_star covers the pair-graph
+    # resolver. Every §2 crawl-core row stays in-window.
     # Out-of-window rows ride on tests/test_oracle_parity.py, which
     # mirrors the driver's strictness including int-vs-float dtype drift.
     return {
@@ -1697,7 +1688,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "scrub_pii": q_scrub_pii,
         "source_stats": q_source_stats,
         "dedup_clusters_star": q_dedup_clusters_star,
-        "dedup_clusters_blocks": q_dedup_clusters_blocks,
+        "resolve_duplicates": q_resolve_duplicates,
         "cosine_topk": q_cosine_topk,
         "cluster_purity": q_cluster_purity,
         "ivf_ann_topk_trained": q_ivf_ann_topk_trained,
@@ -1725,7 +1716,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "train_val_split": q_train_val_split,
         "decontaminate_fuzzy": q_decontaminate_fuzzy,
         "dedup_clusters": q_dedup_clusters,
-        "resolve_duplicates": q_resolve_duplicates,
+        "dedup_clusters_blocks": q_dedup_clusters,
         "line_dedup": q_line_dedup,
         "snapshot_diff": q_snapshot_diff,
         "minhash_signatures": q_minhash_signatures,

@@ -506,10 +506,9 @@ def main() -> None:
     cc_cache = {}
 
     def dedup_clusters_bench():
-        # pair-free bipartite path (dedup_clusters_blocks): output verified
-        # identical to the pairwise dedup_clusters (oracle + equality test);
-        # rows shuffled per round are docs x bands, never k^2 block pairs
-        out = clusters.dedup_clusters_blocks(docs).persist()
+        # bipartite doc<->block propagation: rows shuffled per round are
+        # docs x bands, never k^2 block pairs
+        out = clusters.dedup_clusters(docs).persist()
         extras["dedup_cluster_members"] = out.count()
         cc_cache["cc"] = out
 
@@ -836,12 +835,12 @@ def main() -> None:
         rehearsal's twin for the MinHash pipeline): JVM-side synthesis of
         narrow 10-token docs -> word-shingles -> md5 minhash signatures ->
         LSH band keys -> non-singleton block membership -> bipartite
-        min-label connected components (dedup_clusters_blocks) with keeper
+        min-label connected components (dedup_clusters) with keeper
         flags. The corpus embeds known structure asserted at volume: 1% of
         docs share one boilerplate text (an n/100-member hot block — the
-        case where the pairwise path would need k^2 join rows and salting,
-        and the bipartite path provably costs k rows, which is why this
-        scale path needs no salt at all), 20% form distinct identical-text
+        case where a pair list would need k^2 join rows and salting, and
+        the bipartite path provably costs k rows, which is why this scale
+        path needs no salt at all), 20% form distinct identical-text
         dup pairs, and the rest are unique (singleton blocks, excluded by
         contract). Assertions match what MinHash-LSH actually guarantees:
         RECALL is exact (identical text -> identical signatures -> same
@@ -859,7 +858,7 @@ def main() -> None:
         single stage) from the status store, so the 100 TB claim carries
         measured bytes, not just a plan audit."""
         from supercrawler_spark.operators import dedup as _dedup
-        from supercrawler_spark.operators.clusters import dedup_clusters_blocks
+        from supercrawler_spark.operators.clusters import dedup_clusters
         n = int(os.environ.get("SPARK_GRAFT_DEDUP_N", "1000000"))
         assert n % 100 == 0
         # SPARK_GRAFT_DEDUP_P=wide runs the cluster-deployment modulus
@@ -882,8 +881,8 @@ def main() -> None:
         sdocs = spark.range(n).select(
             F.col("id").alias("doc_id"), text.alias("text"))
         before = _stage_shuffle_writes()
-        out = dedup_clusters_blocks(sdocs, num_hashes=8, band_size=2,
-                                    persist_result=True, p=p)
+        out = dedup_clusters(sdocs, num_hashes=8, band_size=2,
+                             persist_result=True, p=p)
         agg = out.agg(
             F.count("*").alias("docs"),
             F.countDistinct("cluster_id").alias("clusters"),
@@ -908,6 +907,8 @@ def main() -> None:
         assert 0 <= spurious <= (64 if wide else max(64, n // 100)), spurious
         out.unpersist()
         extras["dedup_rehearsal_docs"] = n
+        extras["dedup_rehearsal_members"] = int(agg["docs"])
+        extras["dedup_rehearsal_clusters"] = int(agg["clusters"])
         extras["dedup_rehearsal_spurious_docs"] = int(spurious)
         if fresh:
             extras["dedup_rehearsal_shuffle_mb"] = round(

@@ -1,28 +1,32 @@
-"""Duplicate-cluster resolution: connected components over near-duplicate
-candidate pairs (MinHash-LSH by default), producing one canonical keeper
-per cluster — the step that turns pairwise dedup signals into an actual
-deduplicated corpus.
+"""Duplicate-cluster resolution: transitive near-duplicate grouping over
+MinHash-LSH band blocks, producing one canonical keeper per cluster — the
+step that turns dedup signals into an actual deduplicated corpus.
 
 The reference (duggal1/supercrawler) stops at per-URL exact dedup; a 100 TB
 training corpus additionally needs transitive near-dup grouping: if A~B and
-B~C, all three are one cluster even when A~C was never emitted as a pair.
+B~C, all three are one cluster even when A and C share no LSH band.
 
-Spark-side this is iterative min-label propagation over the undirected pair
-graph (the classic Pregel-style loop, expressed as DataFrame joins):
+``dedup_clusters`` resolves connectivity on the BIPARTITE doc↔block
+membership relation (a block = docs sharing one full LSH band key), never
+on the within-block pair list: min-label propagation alternates
 
-    label(v) ← min(label(v), min over neighbors n of label(n))
+    block_min ← min label of members;  label ← min of member blocks
 
-repeated until a fixpoint. Each iteration is one shuffle keyed on doc_id;
-the iteration count is the graph diameter, which for near-dup graphs is
-tiny (dup clusters are dense — pairs come from shared LSH bands, so most
-clusters are cliques or near-cliques and converge in 2-3 rounds). Each
-round materializes via persist + count and unpersists the previous round,
-so neither the plan lineage nor executor storage grows with the iteration
-count — safe for long chains and for 10^10-edge pair sets.
+until every block is uniform. Rows shuffled per round are docs × bands
+(linear) — a k-member boilerplate block costs k rows where its pairs
+would cost k² — and one round moves a label two pair-graph hops. Each
+round materializes via persist + count and unpersists the previous
+round, so executor storage does not grow with the iteration count;
+non-convergence within ``max_iters`` raises instead of returning split
+components.
+
+``connected_components_star`` is the O(log diameter)-round resolver for
+arbitrary (a_id, b_id) pair graphs (long mirror chains), with per-round
+parquet lineage truncation.
 
 The DuckDB oracle mirrors the semantics (not the algorithm) with a
-recursive-CTE transitive closure — see __spark_entry__.oracle_sql
-["dedup_clusters"].
+recursive-CTE transitive closure over the LSH pairs — see
+__spark_entry__.oracle_sql["dedup_clusters"].
 """
 
 from __future__ import annotations
@@ -32,75 +36,13 @@ from pyspark.sql import DataFrame, Window, functions as F
 from supercrawler_spark.operators import dedup
 
 
-def connected_components(pairs: DataFrame, max_iters: int = 50) -> DataFrame:
-    """Resolve (a_id, b_id) undirected pairs to (doc_id, cluster_id) where
-    cluster_id = min doc_id reachable from doc_id. Only vertices that occur
-    in at least one pair are returned (singletons are trivially their own
-    cluster and are omitted — at corpus scale they're the vast majority and
-    materializing them would dwarf the real output)."""
-    edges = (pairs.select(F.col("a_id").alias("u"), F.col("b_id").alias("v"))
-             .unionByName(
-                 pairs.select(F.col("b_id").alias("u"),
-                              F.col("a_id").alias("v")))
-             .distinct())
-    edges = edges.persist()
-    labels = (edges.select(F.col("u").alias("doc_id")).distinct()
-              .withColumn("cluster", F.col("doc_id")))
-    labels = labels.persist()
-    labels.count()  # materialize the persist
-
-    # fixpoint check: each round carries the previous label alongside the
-    # least(old, nbr_min) update, so "did anything change" is one SUM over
-    # the already-persisted round output — no extra join (the old
-    # nxt⋈labels inequality count was a full extra shuffle per iteration)
-    # and no numeric cast, so ids of ANY orderable type (long doc ids,
-    # string doc keys/urls) converge correctly.
-    converged = False
-    for _ in range(max_iters):
-        nbr = (edges.join(labels, edges.v == labels.doc_id)
-               .groupBy("u").agg(F.min("cluster").alias("nbr_min")))
-        nxt = (labels.join(nbr, labels.doc_id == nbr.u, "left")
-               .select(labels.doc_id,
-                       F.least(F.col("cluster"),
-                               F.coalesce(F.col("nbr_min"), F.col("cluster")))
-                       .alias("cluster"),
-                       F.col("cluster").alias("_prev")))
-        nxt = nxt.persist()  # keep this exact handle for unpersist — a
-        # derived projection would not release the cached blocks
-        n_changed = (nxt.agg(F.sum((F.col("cluster") != F.col("_prev"))
-                                   .cast("long")).alias("c"))
-                     .collect()[0]["c"]) or 0
-        labels.unpersist()
-        labels = nxt
-        if n_changed == 0:
-            converged = True
-            break
-    if not converged:
-        # silently returning partial labels would split one true component
-        # into several clusters (multiple keepers ⇒ duplicates survive a
-        # dedup pass) — fail loud instead; raise max_iters for graphs whose
-        # diameter genuinely exceeds it
-        edges.unpersist()
-        labels.unpersist()
-        raise RuntimeError(
-            f"connected_components did not converge within {max_iters} "
-            "iterations (graph diameter exceeds max_iters)")
-    out = labels.select("doc_id", F.col("cluster").alias("cluster_id"))
-    # detach from the cache so repeated calls never accumulate executor
-    # storage (the round-1 verdict's leak class); the caller's action
-    # replays the (deterministic) iteration lineage once — persist or
-    # write the result if it is consumed more than once
-    edges.unpersist()
-    labels.unpersist()
-    return out
-
-
 def connected_components_star(pairs: DataFrame, max_iters: int = 30,
                               checkpoint_dir: str | None = None) -> DataFrame:
-    """Same contract as ``connected_components`` — (doc_id, cluster_id)
-    with cluster_id = min reachable id, vertices from at least one pair —
-    via alternating large-star/small-star rounds (Kiveris et al. 2014,
-    "Connected Components in MapReduce and Beyond").
+    """Resolve (a_id, b_id) undirected pairs to (doc_id, cluster_id) with
+    cluster_id = min doc_id reachable from doc_id; only vertices that
+    occur in at least one pair are returned. Computed via alternating
+    large-star/small-star rounds (Kiveris et al. 2014, "Connected
+    Components in MapReduce and Beyond").
 
     Min-label propagation moves a component's min one HOP per round, so a
     path of length L needs L shuffles — a crawl-mirror chain or a
@@ -109,8 +51,7 @@ def connected_components_star(pairs: DataFrame, max_iters: int = 30,
     (large-star points larger neighbors at it, small-star collapses the
     rest), which provably converges in O(log L) rounds to a star forest
     rooted at each component's min. Near-dup cliques still converge in ~2
-    rounds, so this is strictly safer for unknown graph shapes; the dense
-    default keeps min-label (fewer shuffles per round).
+    rounds, so this is strictly safer for unknown graph shapes.
 
     Every round materializes to parquet under ``checkpoint_dir`` (a fresh
     temp dir if None) and reads back — per-round LINEAGE TRUNCATION, the
@@ -197,61 +138,27 @@ def connected_components_star(pairs: DataFrame, max_iters: int = 30,
 
 def dedup_clusters(docs: DataFrame, num_hashes: int = 8, band_size: int = 2,
                    text_col: str = "text", id_col: str = "doc_id",
-                   p: int | None = None) -> DataFrame:
-    """MinHash-LSH near-dup clustering end-to-end: candidate pairs →
-    connected components → (doc_id, cluster_id, is_keeper). ``is_keeper``
-    marks the one document per cluster (min doc_id) a dedup pass would
-    retain; filtering the corpus is then a broadcast-or-bucketed semi-join
-    on the keeper set. ``p``: minhash modulus (default P_ORACLE for
-    DuckDB parity; dedup.P_WIDE on oracle-free deployments)."""
-    pairs = dedup.minhash_lsh_pairs(docs, num_hashes, band_size,
-                                    text_col, id_col, p=p)
-    cc = connected_components(pairs.select("a_id", "b_id"))
-    return cc.select(
-        "doc_id", "cluster_id",
-        (F.col("doc_id") == F.col("cluster_id")).alias("is_keeper"))
+                   p: int | None = None, max_iters: int = 50,
+                   persist_result: bool = False) -> DataFrame:
+    """MinHash-LSH near-dup clustering end-to-end: (doc_id, cluster_id,
+    is_keeper) with cluster_id = min doc_id connected through shared
+    band blocks. ``is_keeper`` marks the one document per cluster (min
+    doc_id) a dedup pass would retain; filtering the corpus is then a
+    broadcast-or-bucketed semi-join on the keeper set.
 
-def dedup_clusters_blocks(docs: DataFrame, num_hashes: int = 8,
-                          band_size: int = 2, text_col: str = "text",
-                          id_col: str = "doc_id",
-                          max_iters: int = 50,
-                          persist_result: bool = False,
-                          p: int | None = None) -> DataFrame:
-    """Same output contract as ``dedup_clusters`` — (doc_id, cluster_id,
-    is_keeper) over MinHash-LSH connectivity — resolved on the BIPARTITE
-    doc↔band-block membership relation instead of the pairwise edge list.
-
-    ``dedup_clusters`` materializes every within-block pair (k members →
-    k² join rows) only for connected components to collapse them right
-    back; at web scale the pair join IS the dominant cost and the k²
-    blowup is why ``max_bucket_size``/salting guards exist. Connectivity
-    through a block is equivalent to connectivity through its pairs, so
-    min-label propagation can alternate over the membership relation
-    directly:
-
-        block_min ← min label of members;  label ← min of member blocks
-
-    Rows shuffled per round = docs × bands (linear), never k² — hot
-    boilerplate blocks cost k rows here, so no cap/salt machinery is
-    needed for the clustering path at all. One bipartite round moves a
-    label TWO pair-graph hops, halving round count on chains. Docs whose
-    every block is singleton have no pairs and are excluded, mirroring
-    the pairwise contract. Per-round persist/unpersist and loud
-    non-convergence as in ``connected_components``."""
-    from supercrawler_spark.operators import dedup as _dedup
-
-    # p: minhash modulus — default P_ORACLE (DuckDB-parity); pass
-    # dedup.P_WIDE on oracle-free cluster deployments to suppress the
-    # birthday-law band-collision merge tail (dedup.py constants doc)
-    sig = _dedup.minhash_signatures(
+    Resolved on the doc↔block membership relation (module docstring), so
+    no within-block pair is ever materialized and hot boilerplate blocks
+    need no cap/salt machinery. Docs whose every block is singleton have
+    no near-duplicate and are omitted (at corpus scale they are the vast
+    majority). ``p``: minhash modulus (default P_ORACLE for DuckDB
+    parity; dedup.P_WIDE on oracle-free deployments to suppress the
+    birthday-law band-collision merge tail). ``persist_result`` returns a
+    materialized, cached result the caller must unpersist."""
+    sig = dedup.minhash_sig_array(
         docs, num_hashes, text_col, id_col,
-        p=_dedup.P_ORACLE if p is None else p)
-    bands = (sig
-             .withColumn("band", (F.col("hash_id") / band_size).cast("long"))
-             .groupBy("doc_id", "band")
-             .agg(F.concat_ws(",", F.sort_array(F.collect_list(
-                 F.concat_ws(":", F.col("hash_id"), F.col("min_hash")))))
-                 .alias("band_key")))
+        p=dedup.P_ORACLE if p is None else p)
+    bands = dedup.band_keys(sig, band_size).select("doc_id", "band",
+                                                   "band_key")
     # blocks keyed by the (band, band_key) composite — NOT a 64-bit hash
     # of it: a hash collision would silently merge unrelated clusters
     sized = (bands.groupBy("band", "band_key")
@@ -263,36 +170,40 @@ def dedup_clusters_blocks(docs: DataFrame, num_hashes: int = 8,
     mem = mem.persist()
     labels = (mem.select("doc_id").distinct()
               .withColumn("cluster", F.col("doc_id")))
-    labels = labels.persist()
-    labels.count()
 
+    # fixpoint check: labels are final exactly when every block is uniform
+    # (its members' min and max label agree) — read off the block
+    # aggregate the next update needs anyway, so each round is one job and
+    # the converged labels are the last update, with no no-op round in
+    # their lineage. min/max need no numeric cast, so ids of any orderable
+    # type (long doc ids, string doc keys) converge
+    blk = None
     converged = False
     for _ in range(max_iters):
-        bmin = (mem.join(labels, "doc_id")
-                .groupBy("band", "band_key")
-                .agg(F.min("cluster").alias("bmin")))
-        nmin = (mem.join(bmin, ["band", "band_key"])
-                .groupBy("doc_id").agg(F.min("bmin").alias("nmin")))
-        nxt = (labels.join(nmin, "doc_id", "left")
-               .select(labels["doc_id"],
-                       F.least(F.col("cluster"),
-                               F.coalesce(F.col("nmin"), F.col("cluster")))
-                       .alias("cluster"),
-                       F.col("cluster").alias("_prev")))
-        nxt = nxt.persist()
-        n_changed = (nxt.agg(F.sum((F.col("cluster") != F.col("_prev"))
-                                   .cast("long")).alias("c"))
-                     .collect()[0]["c"]) or 0
-        labels.unpersist()
-        labels = nxt
-        if n_changed == 0:
+        labels = labels.persist()
+        prev_blk = blk
+        blk = (mem.join(labels, "doc_id")
+               .groupBy("band", "band_key")
+               .agg(F.min("cluster").alias("bmin"),
+                    F.max("cluster").alias("bmax"))
+               .persist())
+        n_mixed = blk.filter(F.col("bmin") != F.col("bmax")).count()
+        if prev_blk is not None:
+            prev_blk.unpersist()
+        if n_mixed == 0:
             converged = True
             break
-    if not converged:
-        mem.unpersist()
+        # blk holds all the next update reads; drop this round's labels
         labels.unpersist()
+        labels = (mem.join(blk.select("band", "band_key", "bmin"),
+                           ["band", "band_key"])
+                  .groupBy("doc_id").agg(F.min("bmin").alias("cluster")))
+    caches = [mem, labels, blk]
+    if not converged:
+        for c in caches:
+            c.unpersist()
         raise RuntimeError(
-            f"dedup_clusters_blocks did not converge within {max_iters} "
+            f"dedup_clusters did not converge within {max_iters} "
             "iterations")
     out = labels.select(
         "doc_id", F.col("cluster").alias("cluster_id"),
@@ -304,8 +215,8 @@ def dedup_clusters_blocks(docs: DataFrame, num_hashes: int = 8,
         # chain from unpersisted lineage. Caller owns the unpersist.
         out = out.persist()
         out.count()
-    mem.unpersist()
-    labels.unpersist()
+    for c in caches:
+        c.unpersist()
     return out
 
 
@@ -355,7 +266,7 @@ def cluster_purity(docs: DataFrame, clusters: DataFrame | None = None,
     (cluster_id, n_members, min_sim, avg_sim, n_suspect).
 
     Why it exists: the linear (pair-free) clustering path
-    ``dedup_clusters_blocks`` never materializes within-block pairs, so —
+    ``dedup_clusters`` never materializes within-block pairs, so —
     unlike a pairwise flow that can threshold on estimated Jaccard before
     collapsing — it admits every band-collision edge. Band collisions are
     rare per pair but grow with the square of corpus shingles (birthday
@@ -375,11 +286,15 @@ def cluster_purity(docs: DataFrame, clusters: DataFrame | None = None,
     float comparison is deterministic."""
     # p: minhash modulus — must match the modulus the audited clustering
     # ran with, or the purity estimate reintroduces the very collision
-    # tail a P_WIDE deployment chose to avoid (default P_ORACLE for
-    # DuckDB parity, as in dedup_clusters_blocks)
+    # tail a P_WIDE deployment chose to avoid. Caller-built clusters carry
+    # no record of theirs, so p is required with them; otherwise the
+    # default is P_ORACLE for DuckDB parity, as in dedup_clusters
     if clusters is None:
-        clusters = dedup_clusters_blocks(docs, num_hashes, band_size,
-                                         text_col, id_col, p=p)
+        clusters = dedup_clusters(docs, num_hashes, band_size,
+                                  text_col, id_col, p=p)
+    elif p is None:
+        raise ValueError("cluster_purity: pass the minhash modulus p the "
+                         "given clusters were built with")
     sig = dedup.minhash_sig_array(docs, num_hashes, text_col, id_col,
                                   p=dedup.P_ORACLE if p is None else p)
     mem = clusters.join(sig, "doc_id")

@@ -10,8 +10,9 @@ md5-prefix bigints so the DuckDB oracle can reproduce them bit-for-bit
 Scale notes:
   - exact_dedup: one shuffle on the content hash; min-doc-id winner keeps the
     result deterministic under any partitioning.
-  - minhash_lsh: shingle explode → per-(doc, hashfn) min aggregate (map-side
-    partial agg shrinks the shuffle to n_docs × n_hashes rows) → band-bucket
+  - minhash_lsh: shingle explode → one per-doc signature aggregate (map-side
+    partial agg shrinks the shuffle to n_docs rows of n_hashes values) →
+    band keys sliced from the signature array (no shuffle) → band-bucket
     self-join restricted to equal buckets. The self-join is the classic LSH
     candidate generation: only documents agreeing on a full band collide, so
     the join fan-out stays near-linear for non-duplicate corpora. Skewed
@@ -79,40 +80,20 @@ def shingles(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id",
                        .alias("shingle"))
 
 
-def minhash_signatures(docs: DataFrame, num_hashes: int = 8,
-                       text_col: str = "text", id_col: str = "doc_id",
-                       p: int = P_ORACLE) -> DataFrame:
-    """(doc_id, hash_id, min_hash): num_hashes permutation-free minhashes
-    h_i(s) = (a_i * (md5long(s) mod p) + b_i) mod p, aggregated map-side.
-    Default p is 30-bit so a*h+b stays < 2^63 in BOTH engines (DuckDB
-    raises on BIGINT overflow where the JVM would silently wrap); pass
-    ``P_WIDE`` on oracle-free cluster deployments to suppress the
-    birthday-law band-collision tail (constants doc above)."""
-    # one row per (doc, shingle); the num_hashes permutations become wide
-    # columns min-aggregated per doc (map-side partial agg; no 8x explode),
-    # then unpivoted back to (hash_id, min_hash) rows
-    sh = shingles(docs, text_col, id_col) \
-        .withColumn("h", _md5_long(F.col("shingle")) % p)
-    mins = sh.groupBy("doc_id").agg(*[
-        F.min(F.pmod((2 * i + 1) * F.col("h") + (7 * i + 13), F.lit(p)))
-        .alias(f"_h{i}")
-        for i in range(num_hashes)
-    ])
-    stack = ", ".join(f"{i}L, _h{i}" for i in range(num_hashes))
-    return mins.selectExpr(
-        "doc_id",
-        f"stack({num_hashes}, {stack}) as (hash_id, min_hash)")
-
-
 def minhash_sig_array(docs: DataFrame, num_hashes: int = 8,
                       text_col: str = "text",
                       id_col: str = "doc_id",
                       p: int = P_ORACLE) -> DataFrame:
-    """(doc_id, sig: array<long>) — the same minhash values as
-    ``minhash_signatures`` packed into ONE array row per document, for
-    consumers that need the whole signature downstream of a single
-    aggregation (e.g. decontaminate_fuzzy carries it through the band
-    explode so the corpus-wide shingle aggregation runs exactly once)."""
+    """(doc_id, sig: array<long>): num_hashes permutation-free minhashes
+    h_i(s) = ((2i+1) * (md5long(s) mod p) + 7i+13) mod p, one array row
+    per document. The one signature aggregation every MinHash operator
+    builds on: one row per (doc, shingle), the num_hashes permutations as
+    wide columns min-aggregated per doc (map-side partial agg; no
+    num_hashes-fold explode before the shuffle). Default p is 30-bit so
+    a*h+b stays < 2^63 in BOTH engines (DuckDB raises on BIGINT overflow
+    where the JVM would silently wrap); pass ``P_WIDE`` on oracle-free
+    cluster deployments to suppress the birthday-law band-collision tail
+    (constants doc above)."""
     sh = shingles(docs, text_col, id_col) \
         .withColumn("h", _md5_long(F.col("shingle")) % p)
     mins = sh.groupBy("doc_id").agg(*[
@@ -122,6 +103,35 @@ def minhash_sig_array(docs: DataFrame, num_hashes: int = 8,
     ])
     return mins.select("doc_id", F.array(
         *[F.col(f"_h{i}") for i in range(num_hashes)]).alias("sig"))
+
+
+def minhash_signatures(docs: DataFrame, num_hashes: int = 8,
+                       text_col: str = "text", id_col: str = "doc_id",
+                       p: int = P_ORACLE) -> DataFrame:
+    """(doc_id, hash_id, min_hash): ``minhash_sig_array`` unpacked to one
+    row per hash function (a narrow posexplode after the aggregation)."""
+    sig = minhash_sig_array(docs, num_hashes, text_col, id_col, p=p)
+    return (sig.select("doc_id", F.posexplode("sig").alias("hash_id",
+                                                           "min_hash"))
+            .select("doc_id", F.col("hash_id").cast("long"), "min_hash"))
+
+
+def band_keys(df: DataFrame, band_size: int,
+              sig_col: str = "sig") -> DataFrame:
+    """``df`` plus (band, band_key), one row per LSH band of the minhash
+    array in ``sig_col``: band b covers hashes [b*band_size,
+    (b+1)*band_size), the last band partial when the signature length is
+    not a multiple of band_size. band_key joins the band's values with
+    ':', so two keys of one band are equal exactly when their minhashes
+    agree position by position. A narrow projection + posexplode of the
+    signature row — no shuffle."""
+    last = ((F.size(sig_col) - 1) / band_size).cast("int")
+    keys = F.transform(
+        F.sequence(F.lit(0), last),
+        lambda b: F.concat_ws(":", F.transform(
+            F.slice(F.col(sig_col), b * band_size + 1, band_size),
+            lambda v: v.cast("string"))))
+    return df.select("*", F.posexplode(keys).alias("band", "band_key"))
 
 
 def minhash_lsh_pairs(docs: DataFrame, num_hashes: int = 8, band_size: int = 2,
@@ -161,14 +171,9 @@ def minhash_lsh_pairs(docs: DataFrame, num_hashes: int = 8, band_size: int = 2,
     ``p``: minhash modulus — default ``P_ORACLE`` (DuckDB parity); pass
     ``P_WIDE`` on oracle-free deployments to suppress the birthday-law
     band-collision tail (module constants doc)."""
-    sig = minhash_signatures(docs, num_hashes, text_col, id_col,
-                             p=P_ORACLE if p is None else p)
-    bands = (sig
-             .withColumn("band", (F.col("hash_id") / band_size).cast("long"))
-             .groupBy("doc_id", "band")
-             .agg(F.concat_ws(",", F.sort_array(F.collect_list(
-                 F.concat_ws(":", F.col("hash_id"), F.col("min_hash")))))
-                 .alias("band_key")))
+    sig = minhash_sig_array(docs, num_hashes, text_col, id_col,
+                            p=P_ORACLE if p is None else p)
+    bands = band_keys(sig, band_size).select("doc_id", "band", "band_key")
     if max_bucket_size is not None or salt_buckets is not None:
         wsz = Window.partitionBy("band", "band_key")
         bands = bands.withColumn("_bsz", F.count("*").over(wsz))

@@ -16,7 +16,7 @@ add), so after i rounds every row has followed ``2^i`` hops: resolution of
 the longest chain k costs only ``ceil(log2 k)`` self-join shuffles. Each
 round persists + materializes and unpersists the previous round, so neither
 lineage nor executor storage grows with the iteration count — the same
-discipline as ``clusters.connected_components``. At 10^10 URLs each round is
+discipline as ``clusters.dedup_clusters``. At 10^10 URLs each round is
 one hash-partitioned equi-join on an 8-byte id: AQE-coalesced, no skew
 (redirect targets are near-uniform), no driver-side state.
 

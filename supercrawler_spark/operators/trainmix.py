@@ -98,27 +98,17 @@ def decontaminate_fuzzy(docs: DataFrame, benchmark: DataFrame,
     by benchmark size × band collisions. The estimator floor/variance
     caveats of ``minhash_jaccard_estimate`` apply (floor
     band_size/num_hashes)."""
-    from supercrawler_spark.operators.dedup import minhash_sig_array
+    from supercrawler_spark.operators.dedup import band_keys, minhash_sig_array
 
-    assert num_hashes % band_size == 0
-    n_bands = num_hashes // band_size
     sig_d = minhash_sig_array(docs, num_hashes, text_col, id_col)
     sig_b = (minhash_sig_array(benchmark, num_hashes, text_col,
                                bench_id_col)
              .withColumnRenamed("doc_id", "bench_id")
              .withColumnRenamed("sig", "sigb"))
 
-    def with_bands(df, sig_col):
-        bkeys = F.transform(
-            F.sequence(F.lit(0), F.lit(n_bands - 1)),
-            lambda b: F.concat_ws(":", F.transform(
-                F.slice(F.col(sig_col), b * band_size + 1, band_size),
-                lambda v: v.cast("string"))))
-        return df.select("*", F.posexplode(bkeys).alias("band", "bkey"))
-
-    matched = (with_bands(sig_d, "sig")
-               .join(F.broadcast(with_bands(sig_b, "sigb")),
-                     ["band", "bkey"])
+    matched = (band_keys(sig_d, band_size)
+               .join(F.broadcast(band_keys(sig_b, band_size, "sigb")),
+                     ["band", "band_key"])
                .select("doc_id", "bench_id",
                        F.size(F.filter(
                            F.zip_with("sig", "sigb",

@@ -159,21 +159,23 @@ def _run_pipeline(docs, benchmark, cfg, text_col, id_col, report, caches):
 
     # 3. near-dup resolution — quality-aware keeper per LSH cluster
     if cfg.near_dedup:
+        # one modulus for clustering, audit and resolution
+        p = _dedup.P_ORACLE if cfg.minhash_p is None else cfg.minhash_p
         clusters = None
         if cfg.purity_gate:
-            # Cluster once (persisted: the CC lineage would otherwise
-            # replay for purity AND resolution), audit with the SAME
+            # Cluster once (materialized from the last round's cache: the
+            # iteration lineage would otherwise replay), audit with the SAME
             # modulus the clustering ran with, and drop suspect clusters
             # wholesale — their members are kept, not deduped, pending
             # re-verification. Purity rows are one per cluster (tiny);
             # the anti-join broadcasts.
             clusters = _clusters.dedup_clusters(
-                cur, text_col=text_col, id_col=id_col,
-                p=cfg.minhash_p).persist()
+                cur, text_col=text_col, id_col=id_col, p=p,
+                persist_result=True)
             caches.append(clusters)
             purity = _clusters.cluster_purity(
                 cur, clusters=clusters, text_col=text_col, id_col=id_col,
-                suspect_below=cfg.purity_suspect_below, p=cfg.minhash_p)
+                suspect_below=cfg.purity_suspect_below, p=p)
             suspect = (purity
                        .filter(F.col("min_sim") < cfg.purity_suspect_below)
                        .select("cluster_id").persist())
@@ -182,9 +184,9 @@ def _run_pipeline(docs, benchmark, cfg, text_col, id_col, report, caches):
             clusters = clusters.join(suspect, "cluster_id", "left_anti")
         res = _clusters.resolve_duplicates(cur, clusters=clusters,
                                            text_col=text_col,
-                                           id_col=id_col, p=cfg.minhash_p)
+                                           id_col=id_col, p=p)
         # persist the tiny drop-list: its lineage is the full LSH + iterative
-        # connected-components plan, which would otherwise re-execute for
+        # block-propagation plan, which would otherwise re-execute for
         # the count, the anti-join, and every later stage built on cur
         drop = (res.filter(~F.col("keep"))
                 .select(F.col("doc_id").alias(id_col)).persist())

@@ -1,12 +1,13 @@
 """Tests for the corpus-hygiene operators (repetition signals, PII scrub,
-source stats) and near-dup connected-components clustering."""
+source stats) and near-dup connected-components clustering, checked
+against a pure-Python union-find reference."""
 
 from __future__ import annotations
 
 import pyspark.sql.functions as F
 import pytest
 
-from supercrawler_spark.operators import clusters, corpus
+from supercrawler_spark.operators import clusters, corpus, dedup
 
 
 def _docs(spark, rows):
@@ -104,18 +105,49 @@ def _pairs(spark, edges):
     return spark.createDataFrame(edges, "a_id long, b_id long")
 
 
+def _union_find_cc(edges):
+    """Reference connected components: {vertex: min vertex of its
+    component} over the vertices of ``edges`` — pure-Python union-find
+    whose root is always the component minimum."""
+    parent = {}
+
+    def find(x):
+        parent.setdefault(x, x)
+        while parent[x] != x:
+            parent[x] = parent[parent[x]]
+            x = parent[x]
+        return x
+
+    for a, b in edges:
+        ra, rb = find(a), find(b)
+        parent[max(ra, rb)] = min(ra, rb)
+    return {v: find(v) for v in parent}
+
+
+# A~B through one band, B~C through another, A and C share no band: the
+# shortest fixture whose cluster needs transitive propagation
+_CHAIN_TEXTS = ["w0 w1 w2 w3 w4 w5 w6 w7 w8 w9",
+                "w0 w1 w2 w3 w4 x5 x6 x7 x8 x9",
+                "y0 y1 y2 y3 y4 x5 x6 x7 x8 x9"]
+
+
 def test_connected_components_chain_and_island(spark):
     # chain 1-2-3-4 (transitive, no direct 1-4 pair) + island 7-8
-    cc = {r["doc_id"]: r["cluster_id"] for r in clusters.connected_components(
-        _pairs(spark, [(1, 2), (2, 3), (3, 4), (7, 8)])).collect()}
-    assert cc == {1: 1, 2: 1, 3: 1, 4: 1, 7: 7, 8: 7}
+    edges = [(1, 2), (2, 3), (3, 4), (7, 8)]
+    want = {1: 1, 2: 1, 3: 1, 4: 1, 7: 7, 8: 7}
+    cc = {r["doc_id"]: r["cluster_id"] for r in
+          clusters.connected_components_star(_pairs(spark, edges)).collect()}
+    assert cc == want
+    assert _union_find_cc(edges) == want
 
 
 def test_connected_components_merge_via_shared_member(spark):
     # two cliques sharing one vertex collapse to one cluster
-    cc = {r["doc_id"]: r["cluster_id"] for r in clusters.connected_components(
-        _pairs(spark, [(5, 6), (6, 9), (9, 5), (9, 11)])).collect()}
-    assert set(cc.values()) == {5}
+    edges = [(5, 6), (6, 9), (9, 5), (9, 11)]
+    cc = {r["doc_id"]: r["cluster_id"] for r in
+          clusters.connected_components_star(_pairs(spark, edges)).collect()}
+    assert cc == {5: 5, 6: 5, 9: 5, 11: 5}
+    assert _union_find_cc(edges) == cc
 
 
 def test_dedup_clusters_on_duplicated_docs(spark):
@@ -133,24 +165,33 @@ def test_dedup_clusters_on_duplicated_docs(spark):
 
 
 def test_connected_components_nonconvergence_raises(spark):
-    # a 6-node chain has diameter 5 > max_iters=2: partial labels would
-    # silently split the component, so the operator must fail loud
-    chain = _pairs(spark, [(i, i + 1) for i in range(1, 6)])
+    # the chain needs two propagation rounds plus a fixpoint round;
+    # partial labels would silently split the component, so the operator
+    # must fail loud instead
     with pytest.raises(RuntimeError, match="did not converge"):
-        clusters.connected_components(chain, max_iters=2).collect()
+        clusters.dedup_clusters(_docs(spark, _CHAIN_TEXTS),
+                                max_iters=1).collect()
 
 
 def test_connected_components_string_ids(spark):
     """ids of any orderable type must converge (string doc keys/urls);
     a numeric-only fixpoint check would crash under ANSI or silently
     return partial labels with ANSI off."""
-    edges = spark.createDataFrame(
-        [("urlB", "urlC"), ("urlA", "urlB"), ("urlX", "urlY")],
-        "a_id string, b_id string")
+    edges = [("urlB", "urlC"), ("urlA", "urlB"), ("urlX", "urlY")]
     cc = {r["doc_id"]: r["cluster_id"]
-          for r in clusters.connected_components(edges).collect()}
-    assert cc == {"urlA": "urlA", "urlB": "urlA", "urlC": "urlA",
-                  "urlX": "urlX", "urlY": "urlX"}
+          for r in clusters.connected_components_star(spark.createDataFrame(
+              edges, "a_id string, b_id string")).collect()}
+    want = {"urlA": "urlA", "urlB": "urlA", "urlC": "urlA",
+            "urlX": "urlX", "urlY": "urlX"}
+    assert cc == want
+    assert _union_find_cc(edges) == want
+    # the block path's fixpoint check is type-free too
+    docs = spark.createDataFrame(
+        [(f"url{c}", t) for c, t in zip("ABC", _CHAIN_TEXTS)],
+        "doc_id string, text string")
+    got = {r["doc_id"]: r["cluster_id"]
+           for r in clusters.dedup_clusters(docs).collect()}
+    assert got == {"urlA": "urlA", "urlB": "urlA", "urlC": "urlA"}
 
 
 def test_resolve_duplicates_string_ids(spark):
@@ -176,7 +217,7 @@ def test_filter_corpus_single_scan_no_join(spark):
 def test_clusters_no_cached_leak(spark):
     jsc = spark.sparkContext._jsc.sc()
     before = jsc.getPersistentRDDs().size()
-    clusters.connected_components(_pairs(spark, [(1, 2), (3, 4)])).collect()
+    clusters.dedup_clusters(_docs(spark, _CHAIN_TEXTS)).collect()
     # the operator must not leave anything new cached behind
     assert jsc.getPersistentRDDs().size() <= before
 
@@ -259,38 +300,31 @@ def test_anchor_corpus_aggregation_and_plan(spark):
     assert "WindowGroupLimit" in plan
 
 
-def _pairs_df(spark, edges):
-    return spark.createDataFrame(edges, "a_id long, b_id long")
-
-
 def test_star_cc_matches_min_label_on_random_graphs(spark):
     """large-star/small-star must produce exactly the min-label contract:
-    (doc_id, cluster_id=min reachable id) over pair-participating vertices."""
+    (doc_id, cluster_id=min reachable id) over pair-participating
+    vertices — checked against an independent union-find."""
     import random
     rng = random.Random(7)
     for trial in range(3):
         edges = [(rng.randrange(60), rng.randrange(60)) for _ in range(70)]
         edges = [(a, b) for a, b in edges if a != b]
-        df = _pairs_df(spark, edges)
-        ref = {(r["doc_id"], r["cluster_id"])
-               for r in clusters.connected_components(df).collect()}
-        got = {(r["doc_id"], r["cluster_id"])
-               for r in clusters.connected_components_star(df).collect()}
-        assert got == ref, f"trial {trial}"
+        got = {r["doc_id"]: r["cluster_id"] for r in
+               clusters.connected_components_star(
+                   _pairs(spark, edges)).collect()}
+        assert got == _union_find_cc(edges), f"trial {trial}"
 
 
 def test_star_cc_long_chain_beyond_min_label_budget(spark):
-    """A 120-node path has diameter 119 — min-label needs 119 rounds (and
-    its in-memory loop's plan multiplies ~3x per round, so a budget that
-    large is not even expressible); star rounds converge in O(log n).
-    Min-label's fail-loud path is checked at a small budget where its
-    replay lineage is still tractable."""
-    short = _pairs_df(spark, [(i, i + 1) for i in range(29)])
+    """A 120-node path has diameter 119 — min-label propagation would need
+    ~119 rounds; star rounds converge in O(log n). A budget too small for
+    the star loop still fails loud."""
+    short = _pairs(spark, [(i, i + 1) for i in range(29)])
     with pytest.raises(RuntimeError, match="did not converge"):
-        clusters.connected_components(short, max_iters=6)
+        clusters.connected_components_star(short, max_iters=2)
     edges = [(i, i + 1) for i in range(119)]
     out = clusters.connected_components_star(
-        _pairs_df(spark, edges), max_iters=20).collect()
+        _pairs(spark, edges), max_iters=20).collect()
     assert len(out) == 120
     assert all(r["cluster_id"] == 0 for r in out)
 
@@ -310,36 +344,70 @@ def test_star_cc_string_ids_and_cache_release(spark):
 
 
 def test_blocks_cc_matches_pairwise_dedup_clusters(spark):
-    """Bipartite block propagation must reproduce the pairwise contract
-    exactly: same members, same min-id clusters, same keepers."""
+    """Bipartite block propagation must reproduce connected components of
+    the LSH pair graph exactly: same members, same min-id clusters, same
+    keepers."""
     rows = []
     base = "alpha beta gamma delta epsilon zeta eta theta iota kappa"
     for i in range(12):
         rows.append((i, base + f" tail{i % 3}"))       # 3 near-dup groups
     rows.append((50, "totally unrelated text body one two three four"))
     docs = spark.createDataFrame(rows, "doc_id long, text string")
-    ref = {(r["doc_id"], r["cluster_id"], r["is_keeper"])
-           for r in clusters.dedup_clusters(docs).collect()}
+    pairs = [(r["a_id"], r["b_id"])
+             for r in dedup.minhash_lsh_pairs(docs).collect()]
+    ref = {(d, c, d == c) for d, c in _union_find_cc(pairs).items()}
     got = {(r["doc_id"], r["cluster_id"], r["is_keeper"])
-           for r in clusters.dedup_clusters_blocks(docs).collect()}
+           for r in clusters.dedup_clusters(docs).collect()}
     assert got == ref and got
 
 
 def test_blocks_cc_chain_through_shared_blocks(spark):
     """Transitivity across blocks: A~B via one band, B~C via another —
     all three land in one cluster even though A,C share no block."""
-    docs = spark.createDataFrame([
-        (0, "w0 w1 w2 w3 w4 w5 w6 w7 w8 w9"),
-        (1, "w0 w1 w2 w3 w4 x5 x6 x7 x8 x9"),
-        (2, "y0 y1 y2 y3 y4 x5 x6 x7 x8 x9"),
-    ], "doc_id long, text string")
-    ref = {(r["doc_id"], r["cluster_id"])
+    docs = _docs(spark, _CHAIN_TEXTS)
+    pairs = {(r["a_id"], r["b_id"])
+             for r in dedup.minhash_lsh_pairs(docs).collect()}
+    assert pairs == {(0, 1), (1, 2)}
+    got = {(r["doc_id"], r["cluster_id"])
            for r in clusters.dedup_clusters(docs, num_hashes=8,
                                             band_size=2).collect()}
-    got = {(r["doc_id"], r["cluster_id"])
-           for r in clusters.dedup_clusters_blocks(docs, num_hashes=8,
-                                                   band_size=2).collect()}
-    assert got == ref
+    assert got == {(0, 0), (1, 0), (2, 0)}
+
+
+def test_band_keys_match_grouped_band_blocks(spark):
+    """Slice-based band keys give the same non-singleton blocks as the
+    per-(doc, band) collect_list form over the tall signature table,
+    including a partial last band (7 hashes in bands of 2)."""
+    base = "alpha beta gamma delta epsilon zeta eta theta iota kappa"
+    docs = spark.createDataFrame(
+        [(i, base + f" tail{i % 4}" + (" more" if i % 3 else ""))
+         for i in range(12)]
+        + [(20, "w0 w1 w2 w3 w4 w5 w6 w7"), (21, "w0 w1 w2 w3 w4 w5 w6 w7")],
+        "doc_id long, text string")
+
+    def blocks(rows):
+        members = {}
+        for d, band, key in rows:
+            members.setdefault((band, key), set()).add(d)
+        return {(band, frozenset(m)) for (band, _), m in members.items()
+                if len(m) >= 2}
+
+    sig = dedup.minhash_sig_array(docs, num_hashes=7)
+    got = dedup.band_keys(sig, 2).collect()
+    assert {len(r["band_key"].split(":")) for r in got if r["band"] == 3} \
+        == {1}                                       # partial last band
+    assert len(got) == 4 * docs.count()
+    grouped = (dedup.minhash_signatures(docs, num_hashes=7)
+               .withColumn("band", (F.col("hash_id") / 2).cast("long"))
+               .groupBy("doc_id", "band")
+               .agg(F.concat_ws(",", F.sort_array(F.collect_list(
+                   F.concat_ws(":", F.col("hash_id"), F.col("min_hash")))))
+                   .alias("band_key"))
+               .collect())
+    want = blocks((r["doc_id"], r["band"], r["band_key"]) for r in grouped)
+    assert blocks((r["doc_id"], r["band"], r["band_key"]) for r in got) \
+        == want
+    assert any(b[0] == 3 for b in want) and len(want) > 4
 
 
 # ---------------------------------------------------------------- purity
@@ -362,7 +430,8 @@ def test_cluster_purity_identical_and_planted_suspect(spark):
          (3, 3, True), (4, 3, False)],
         "doc_id long, cluster_id long, is_keeper boolean")
     out = {r["cluster_id"]: r for r in
-           clusters.cluster_purity(docs, clusters=planted).collect()}
+           clusters.cluster_purity(docs, clusters=planted,
+                                   p=dedup.P_ORACLE).collect()}
     c0, c3 = out[0], out[3]
     assert c0["n_members"] == 3
     assert c0["avg_sim"] < 1.0 and c0["min_sim"] < 0.5
@@ -372,7 +441,7 @@ def test_cluster_purity_identical_and_planted_suspect(spark):
 
 
 def test_cluster_purity_end_to_end_blocks_path(spark):
-    """Default path (clusters from dedup_clusters_blocks): identical docs
+    """Default path (clusters from dedup_clusters): identical docs
     cluster together and score est 1.0; singletons are omitted."""
     rows = [
         "the quick brown fox jumps over the lazy dog today",
@@ -384,3 +453,15 @@ def test_cluster_purity_end_to_end_blocks_path(spark):
     r = out[0]
     assert r["n_members"] == 2
     assert (r["min_sim"], r["avg_sim"], r["n_suspect"]) == (1.0, 1.0, 0)
+
+
+def test_cluster_purity_requires_modulus_with_given_clusters(spark):
+    """Caller-built clusters carry no record of their minhash modulus, so
+    auditing them without ``p`` must fail instead of defaulting to
+    P_ORACLE (which would re-admit a P_WIDE deployment's collision tail)."""
+    docs = _docs(spark, ["a b c d e f", "a b c d e f"])
+    given = spark.createDataFrame(
+        [(0, 0, True), (1, 0, False)],
+        "doc_id long, cluster_id long, is_keeper boolean")
+    with pytest.raises(ValueError, match="modulus"):
+        clusters.cluster_purity(docs, clusters=given)

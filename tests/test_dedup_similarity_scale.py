@@ -666,12 +666,12 @@ def test_minhash_wide_modulus_contract(spark):
 def test_dedup_clusters_blocks_wide_p_equiv_on_dups(spark):
     """Clustering contract is modulus-independent for identical docs."""
     from supercrawler_spark.operators import dedup
-    from supercrawler_spark.operators.clusters import dedup_clusters_blocks
+    from supercrawler_spark.operators.clusters import dedup_clusters
     docs = spark.createDataFrame(
         [(i, t) for i, t in enumerate(
             ["x y z w v u", "x y z w v u", "a b c d e f",
              "a b c d e f", "lone wolf text row here"])],
         "doc_id long, text string")
     got = sorted(map(tuple,
-                     dedup_clusters_blocks(docs, p=dedup.P_WIDE).collect()))
+                     dedup_clusters(docs, p=dedup.P_WIDE).collect()))
     assert got == [(0, 0, True), (1, 0, False), (2, 2, True), (3, 2, False)]

@@ -77,6 +77,27 @@ def test_pipeline_no_benchmark_no_pii(spark, raw):
     assert "someone@example.com" in row6["text"]
 
 
+@pytest.mark.parametrize("purity_gate", [False, True])
+def test_pipeline_near_dedup_builds_no_pairs(spark, raw, monkeypatch,
+                                             purity_gate):
+    """Near-dup resolution runs on LSH blocks only: the pipeline (with or
+    without the purity gate) and resolve_duplicates never build the
+    within-block pair list."""
+    from supercrawler_spark.operators import clusters, dedup
+
+    def no_pairs(*a, **k):
+        raise AssertionError("minhash_lsh_pairs called")
+
+    monkeypatch.setattr(dedup, "minhash_lsh_pairs", no_pairs)
+    clean, report = prepare_training_corpus(
+        raw, config=CorpusPipelineConfig(min_tokens=10,
+                                         purity_gate=purity_gate))
+    assert report["near_dup_dropped"] == 1               # doc 4
+    assert {r["doc_id"] for r in clean.collect()} == {0, 2, 5, 6}
+    res = clusters.resolve_duplicates(raw).collect()
+    assert {r["doc_id"] for r in res if not r["keep"]} >= {3, 4}
+
+
 # Engineered band-collision partner for GOOD at p=P_ORACLE: word-shingle
 # Jaccard is only 0.091, yet minhash band (hash pairs) collision occurs and
 # signature agreement with GOOD is 3/8 = 0.375 < 0.5 — a spurious LSH merge
